@@ -163,7 +163,8 @@ object Dedup {
   /**
    * Verified near-duplicates: LSH candidates filtered by exact shingle
    * Jaccard ≥ `threshold`. The exact check joins the (distinct-shingle)
-   * sets back only for candidate pairs.
+   * sets back only for candidate pairs. Ids must be unique (see the
+   * preconditions on [[ExactGroups]]).
    */
   def minhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
@@ -266,20 +267,13 @@ object Dedup {
     * candidate-pair frame materializes (persist vs lazy localCheckpoint —
     * see the two public entry points).
     *
-    * `groupExact` (r19, guide §8 — the [[ngramJaccardPairs]] analysis
-    * applied to LSH): verbatim duplicates share their whole signature,
-    * so every copy hashes, bands, pairs and verifies redundantly. When
-    * true (default), identical texts collapse to one GROUP row before
-    * the signature (one text-keyed exchange): hashing/banding runs once
-    * per distinct text, the bucket cap compares Σ group sizes (the same
-    * member count the ungrouped bucket carried), candidate pairs and
-    * the exact-Jaccard verify run at group grain (identical texts ⇒
-    * identical shingle sets ⇒ identical jaccard for every member pair),
-    * and verified group pairs expand back to member pairs at the end —
-    * result-identical (differential-pinned in DedupNgramSpec).
-    * Callers whose input is ALREADY exact-deduped (Pipelines.dedupCorpus
-    * runs after [[dedupExact]]) pass false: every group would be a
-    * singleton and the grouping exchange pure overhead. */
+    * `groupExact` (default true): identical texts collapse to one
+    * [[ExactGroups]] row before the signature, so hashing, banding,
+    * candidate pairs and the exact-Jaccard verify run once per distinct
+    * text — result-identical (see [[ExactGroups]]). Callers whose input
+    * is ALREADY exact-deduped (Pipelines.dedupCorpus runs after
+    * [[dedupExact]]) pass false: every group would be a singleton and
+    * the grouping exchange pure overhead. */
   private def minhashCore(
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, cfg: LshConfig,
@@ -306,29 +300,13 @@ object Dedup {
       df: DataFrame, idCol: String, textCol: String,
       threshold: Double, cfg: LshConfig,
       share: DataFrame => DataFrame): (DataFrame, () => Unit) = {
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    val groups = ExactGroups.of(df, idCol, textCol)
     val gb = groups.select(col("gid"), col("g"),
         graft.functions.minhash_buckets(shingles(col("__text"), cfg.shingleSize),
           cfg.numHashes, cfg.bands, cfg.seed).as("buckets"))
       .where(col("buckets").isNotNull)
       .select(col("gid"), col("g"), posexplode(col("buckets")).as(Seq("band", "bucket")))
-    // bucket-size cap on the TRUE member count (Σg — all members of a
-    // group band identically, so the ungrouped bucket held exactly
-    // these members); pair generation is combinations-with-self
-    // (slice from i+1): (i,i) is the within-group pair, kept only for
-    // groups with ≥2 members
-    val glists = gb.groupBy("band", "bucket")
-      .agg(sort_array(collect_list(struct(col("gid"), col("g")))).as("ps"),
-        sum(col("g")).as("n"))
-      .where(col("n") > 1 && col("n") <= cfg.maxBucketSize)
-    val gpairs = share(glists
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
-      .where(col("a.gid") =!= col("b.gid") || col("a.g") >= 2)
+    val gpairs = share(ExactGroups.pairs(gb, Seq("band", "bucket"), Nil, cfg.maxBucketSize)
       .select(col("a.gid").as("id_a"), col("b.gid").as("id_b"))
       .distinct())
     // verify at GROUP grain: representative shingle sets only
@@ -337,20 +315,8 @@ object Dedup {
     val gsh = groups.join(candGids, groups("gid") === candGids("id"), "left_semi")
       .select(col("gid").as("id"),
         array_distinct(shingles(col("__text"), cfg.shingleSize)).as("sh"))
-    val out = verifyByShingles(gpairs, gsh, threshold)
-      // expand verified group pairs to member pairs (canonical id
-      // order; within-group pairs via the `<` filter over the self
-      // cross — the ngramJaccardPairs expansion shape)
-      .join(groups.select(col("gid").as("id_a"), col("members").as("__ms_a")), "id_a")
-      .join(groups.select(col("gid").as("id_b"), col("members").as("__ms_b")), "id_b")
-      .select(col("id_a"), col("id_b"), col("jaccard"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("id_a"), col("id_b"), col("jaccard"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("id_a") =!= col("id_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("jaccard"))
+    val out = ExactGroups.expandPairs(
+      verifyByShingles(gpairs, gsh, threshold).toDF("gid_a", "gid_b", "jaccard"), groups)
     (out, () => { gpairs.unpersist(blocking = false); () })
   }
 
@@ -726,24 +692,17 @@ object Dedup {
    * at least one chunk exactly — bucket-join on (chunk index, chunk value)
    * then verify with the exact popcount.
    *
-   * Exact-duplicate grouping (r19): identical texts share their whole
-   * SimHash, so — as in [[ngramJaccardPairs]] and [[minhashCore]] —
-   * they collapse to one group row before hashing/banding; the bucket
-   * cap compares Σ group sizes (the ungrouped bucket's member count),
-   * pairs generate at group grain (combinations incl. the (A,A) self
-   * pair for groups of ≥2, whose Hamming distance is 0 and always
-   * ≤ maxDistance), and verified group pairs expand to member pairs —
-   * result-identical (differential-pinned in DedupNgramSpec).
+   * Identical texts share their whole SimHash, so hashing, banding and
+   * pairing run once per [[ExactGroups]] group (a group's self-pair has
+   * Hamming distance 0) and verified group pairs expand to member pairs.
+   * Ids must be unique (see the preconditions on [[ExactGroups]]).
    */
   def simhashNearDuplicates(
       df: DataFrame, idCol: String, textCol: String,
       maxDistance: Int = 3, seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
     val chunks = maxDistance + 1
     val bits = 64 / chunks
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    val groups = ExactGroups.of(df, idCol, textCol)
     val gsh = groups.select(col("gid"), col("g"),
       simhash64(tokens(col("__text")), seed).as("simhash"))
     val bandStructs = (0 until chunks).map { i =>
@@ -753,58 +712,13 @@ object Dedup {
     val banded = gsh.select(col("gid"), col("g"), col("simhash"),
         explode(array(bandStructs: _*)).as("c"))
       .select(col("gid"), col("g"), col("simhash"), col("c.chunk"), col("c.value"))
-    val glists = banded.groupBy("chunk", "value")
-      .agg(sort_array(collect_list(struct(col("gid"), col("simhash"), col("g")))).as("ps"),
-        sum(col("g")).as("n"))
-      .where(col("n") > 1 && col("n") <= maxBucketSize)
-    glists
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
-      .where(col("a.gid") =!= col("b.gid") || col("a.g") >= 2)
-      .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
-        hamming64(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .where(col("hamming") <= maxDistance)
-      .distinct()
-      .join(groups.select(col("gid").as("gid_a"), col("members").as("__ms_a")), "gid_a")
-      .join(groups.select(col("gid").as("gid_b"), col("members").as("__ms_b")), "gid_b")
-      .select(col("gid_a"), col("gid_b"), col("hamming"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("gid_a"), col("gid_b"), col("hamming"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("gid_a") =!= col("gid_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("hamming"))
-  }
-
-  /** The pre-r19 UNGROUPED simhash pair pipeline, kept as the
-    * differential-testing reference for [[simhashNearDuplicates]].
-    * Not on any query path. */
-  private[graft] def simhashNearDuplicatesUngrouped(
-      df: DataFrame, idCol: String, textCol: String,
-      maxDistance: Int = 3, seed: Long = 42L, maxBucketSize: Int = 10000): DataFrame = {
-    val chunks = maxDistance + 1
-    val bits = 64 / chunks
-    val sh = withSimhash(df, idCol, textCol, seed)
-    val bandStructs = (0 until chunks).map { i =>
-      struct(lit(i).as("chunk"),
-        shiftrightunsigned(col("simhash"), i * bits).bitwiseAND(lit((1L << bits) - 1)).as("value"))
-    }
-    val banded = sh.select(col("doc_id"), col("simhash"),
-        explode(array(bandStructs: _*)).as("c"))
-      .select(col("doc_id"), col("simhash"), col("c.chunk"), col("c.value"))
-    val grouped = banded.groupBy("chunk", "value")
-      .agg(collect_list(struct(col("doc_id"), col("simhash"))).as("members"), count(lit(1)).as("n"))
-      .where(col("n") > 1 && col("n") <= maxBucketSize)
-    grouped
-      .select(explode(col("members")).as("a"), col("members"))
-      .select(col("a"), explode(col("members")).as("b"))
-      .where(col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        hamming64(col("a.simhash"), col("b.simhash")).as("hamming"))
-      .where(col("hamming") <= maxDistance)
-      .distinct()
+    ExactGroups.expandPairs(
+      ExactGroups.pairs(banded, Seq("chunk", "value"), Seq("simhash"), maxBucketSize)
+        .select(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
+          hamming64(col("a.simhash"), col("b.simhash")).as("hamming"))
+        .where(col("hamming") <= maxDistance)
+        .distinct(),
+      groups)
   }
 
   // ----------------------------------------------------- n-gram jaccard
@@ -816,28 +730,12 @@ object Dedup {
    * `maxPostings` caps degenerate shingles (stop-shingles) the same way
    * a text index drops stop words.
    *
-   * ==Exact-duplicate grouping (r19 optimization, guide §8)==
-   * Verbatim duplicates — the dominant redundancy in any crawl, and
-   * exactly what the 10× force fixture replicates — share their entire
-   * shingle set, so every copy pays the full quadratic pair cost for
-   * information one representative already carries. The kernel now
-   * collapses identical texts to one GROUP row before the inverted
-   * index (one text-keyed exchange, the same shape [[dedupExact]]
-   * ships), runs the posting/pair/intersection stages at group grain,
-   * and expands the verified group pairs back to member pairs at the
-   * very end. Result-IDENTICAL to the ungrouped kernel (differential-
-   * pinned in DedupNgramSpec, incl. cap-engaging and null-id cases):
-   *  - the cap condition compares the TRUE member count (Σ group
-   *    sizes per shingle) against `maxPostings`, the same number the
-   *    ungrouped posting-list length carried;
-   *  - members of one group have identical shingle sets, so every
-   *    member pair of a group pair shares the same (inter, na, nb)
-   *    and therefore the same jaccard — including within-group pairs,
-   *    whose jaccard falls below 1.0 exactly when capped lists drop
-   *    shared shingles, which the (A,A) self-pair reproduces;
-   *  - null ids never emit pairs (old: `a.id < b.id` is null-false;
-   *    new: `min`/`collect_list` skip nulls) while still occupying
-   *    cap slots (`count(*)` counts them) — both sides agree.
+   * Verbatim duplicates share their entire shingle set, so the posting,
+   * pair and intersection stages run once per [[ExactGroups]] group and
+   * the verified group pairs expand back to member pairs at the very
+   * end — result-identical to the ungrouped kernel (see [[ExactGroups]]).
+   * Ids must be unique, and null ids never pair while still occupying
+   * cap slots (the [[ExactGroups]] rules).
    * Measured (ProbeR19Ngram, interleaved min-of-3): 10× force fixture
    * 11.4s → 1.1s (the intersection aggregation shrinks ~replication²:
    * Σk² 279M → group-grain); sf0.1 pays ~+0.3s of extra stages
@@ -848,15 +746,7 @@ object Dedup {
   def ngramJaccardPairs(
       df: DataFrame, idCol: String, textCol: String,
       n: Int = 3, threshold: Double = 0.5, maxPostings: Int = 500): DataFrame = {
-    // one row per DISTINCT text: representative id (min), member count,
-    // member ids. Lazy localCheckpoint: the frame feeds both the
-    // posting pipeline and the final member expansion — RDD-owned
-    // blocks, no session cache entry (the minhashNearDuplicates
-    // discipline).
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    val groups = ExactGroups.of(df, idCol, textCol)
     val gsh = groups.select(col("gid"), col("g"),
         array_distinct(shingles(col("__text"), n)).as("sh"))
       .withColumn("n_sh", size(col("sh")))
@@ -871,73 +761,20 @@ object Dedup {
     // per corpus; pass a wider custom hash here before going past that.
     val postings = gsh.select(col("gid"), col("g"), col("n_sh"), explode(col("sh")).as("__shingle"))
       .select(col("gid"), col("g"), col("n_sh"), xxhash64(col("__shingle")).as("shingle"))
-    val lists = postings.groupBy("shingle")
-      .agg(sort_array(collect_list(struct(col("gid"), col("n_sh"), col("g")))).as("ps"),
-        sum(col("g")).as("n_members"))
-      .where(col("n_members").between(2, maxPostings))
-    lists
-      // unordered combinations, not the k² cross product: posexplode
-      // positions each entry; pairing with the slice FROM ITSELF
-      // onward emits k(k+1)/2 rows — (i,i) is the within-group pair,
-      // kept only when the group has ≥2 members; sort_array makes
-      // gid_a ≤ gid_b hold by construction (gids are unique per list)
-      .select(posexplode(col("ps")).as(Seq("__i", "a")), col("ps"))
-      .select(col("a"),
-        explode(slice(col("ps"), col("__i") + 1, size(col("ps")) - col("__i"))).as("b"))
+    val gpairs = ExactGroups.pairs(postings, Seq("shingle"), Seq("n_sh"), maxPostings)
       // Length filter (guaranteed-safe prune, not a heuristic): with
       // na <= nb, J <= |A∩B|/nb <= na/nb, so J >= t forces
       // t*nb <= na (and symmetrically t*na <= nb). Pairs with
       // mismatched shingle-set sizes drop BEFORE the intersection
       // count aggregation ever sees them.
-      .where((col("a.gid") =!= col("b.gid") || col("a.g") >= 2) &&
-        col("a.n_sh") >= col("b.n_sh") * threshold &&
+      .where(col("a.n_sh") >= col("b.n_sh") * threshold &&
         col("b.n_sh") >= col("a.n_sh") * threshold)
       .groupBy(col("a.gid").as("gid_a"), col("b.gid").as("gid_b"),
         col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
       .agg(count(lit(1)).as("inter"))
       .withColumn("jaccard", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jaccard") >= threshold)
-      // expand verified GROUP pairs to member pairs: cross-group pairs
-      // emit each unordered member pair once (canonical id order via
-      // when/otherwise); within-group (gid_a = gid_b) pairs emit the
-      // member combinations via the `<` filter over the self cross
-      .join(groups.select(col("gid").as("gid_a"), col("members").as("__ms_a")), "gid_a")
-      .join(groups.select(col("gid").as("gid_b"), col("members").as("__ms_b")), "gid_b")
-      .select(col("gid_a"), col("gid_b"), col("jaccard"),
-        explode(col("__ms_a")).as("__ia"), col("__ms_b"))
-      .select(col("gid_a"), col("gid_b"), col("jaccard"), col("__ia"),
-        explode(col("__ms_b")).as("__ib"))
-      .where(col("gid_a") =!= col("gid_b") || col("__ia") < col("__ib"))
-      .select(when(col("__ia") < col("__ib"), col("__ia")).otherwise(col("__ib")).as("id_a"),
-        when(col("__ia") < col("__ib"), col("__ib")).otherwise(col("__ia")).as("id_b"),
-        col("jaccard"))
-  }
-
-  /** The pre-r19 UNGROUPED kernel, kept as the differential-testing
-    * reference for [[ngramJaccardPairs]] (DedupNgramSpec asserts
-    * set-identical output on duplicate-heavy, cap-engaging, and
-    * null-id corpora). Not on any query path. */
-  private[graft] def ngramJaccardPairsUngrouped(
-      df: DataFrame, idCol: String, textCol: String,
-      n: Int = 3, threshold: Double = 0.5, maxPostings: Int = 500): DataFrame = {
-    val sh = df.select(col(idCol).as("id"), array_distinct(shingles(col(textCol), n)).as("sh"))
-      .withColumn("n_sh", size(col("sh")))
-    val postings = sh.select(col("id"), col("n_sh"), explode(col("sh")).as("__shingle"))
-      .select(col("id"), col("n_sh"), xxhash64(col("__shingle")).as("shingle"))
-    val lists = postings.groupBy("shingle")
-      .agg(collect_list(struct(col("id"), col("n_sh"))).as("ps"))
-      .where(size(col("ps")).between(2, maxPostings))
-    lists
-      .select(explode(col("ps")).as("a"), col("ps"))
-      .select(col("a"), explode(col("ps")).as("b"))
-      .where(col("a.id") < col("b.id") &&
-        col("a.n_sh") >= col("b.n_sh") * threshold &&
-        col("b.n_sh") >= col("a.n_sh") * threshold)
-      .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"),
-        col("a.n_sh").as("na"), col("b.n_sh").as("nb"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
-      .where(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+      .select("gid_a", "gid_b", "jaccard")
+    ExactGroups.expandPairs(gpairs, groups)
   }
 }

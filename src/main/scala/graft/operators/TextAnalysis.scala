@@ -216,21 +216,13 @@ object TextAnalysis {
    * the (tiny) bigram-count table — no window, no second corpus scan;
    * the score join shuffles on the bigram key, partition-parallel.
    *
+   * Identical texts run once per [[ExactGroups]] group, with the LM
+   * counts weighted by group size; a null id gets no row.
+   *
    * Output: (idCol, n_bigrams, avg_logp, perplexity).
    */
   def bigramPerplexity(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    // Exact-duplicate grouping (r19, the Dedup-kernel analysis applied
-    // to the LM family): identical texts contribute identical bigram
-    // multisets, so the corpus explodes ONCE PER DISTINCT TEXT with the
-    // LM counts weighted by group size (a bigram occurring c times in a
-    // text adds c·g, exactly the c-per-copy the ungrouped explode
-    // added), and the per-document score — a function of the text and
-    // the corpus LM only — computes per group and expands to members.
-    // Differential-pinned in DedupNgramSpec.
-    val groups = df.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    val groups = ExactGroups.of(df, idCol, textCol)
     val gBigrams = groups.where(size(Dedup.tokens(col("__text"))) >= 2)
       .select(col("gid"), col("g"), explode(Dedup.shingles(col("__text"), 2)).as("bigram"))
     val counts = gBigrams.groupBy("bigram").agg(sum(col("g")).as("n"))
@@ -238,34 +230,13 @@ object TextAnalysis {
     val ctx = counts.groupBy("w1").agg(sum("n").as("ctx_n"))
     val lm = counts.join(ctx, "w1")
       .select(col("bigram"), (col("n").cast("double") / col("ctx_n")).as("p"))
-    gBigrams.join(lm, "bigram")
+    val perGroup = gBigrams.join(lm, "bigram")
       .groupBy("gid")
       .agg(count(lit(1)).as("n_bigrams"), avg(log(col("p"))).as("__alp"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_bigrams"), col("__alp"))
-      .select(col(idCol), col("n_bigrams"),
+      .select(col("gid"), col("n_bigrams"),
         round(col("__alp"), 4).as("avg_logp"),
         round(exp(-col("__alp")), 4).as("perplexity"))
-  }
-
-  /** The pre-r19 UNGROUPED perplexity pipeline, kept as the
-    * differential-testing reference for [[bigramPerplexity]]. Not on
-    * any query path. */
-  private[graft] def bigramPerplexityUngrouped(
-      df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val docBigrams = df.where(size(Dedup.tokens(col(textCol))) >= 2)
-      .select(col(idCol), explode(Dedup.shingles(col(textCol), 2)).as("bigram"))
-    val counts = docBigrams.groupBy("bigram").agg(count(lit(1)).as("n"))
-      .withColumn("w1", split(col("bigram"), " ").getItem(0))
-    val ctx = counts.groupBy("w1").agg(sum("n").as("ctx_n"))
-    val lm = counts.join(ctx, "w1")
-      .select(col("bigram"), (col("n").cast("double") / col("ctx_n")).as("p"))
-    docBigrams.join(lm, "bigram")
-      .groupBy(idCol)
-      .agg(count(lit(1)).as("n_bigrams"), avg(log(col("p"))).as("__alp"))
-      .select(col(idCol), col("n_bigrams"),
-        round(col("__alp"), 4).as("avg_logp"),
-        round(exp(-col("__alp")), 4).as("perplexity"))
+    ExactGroups.expandMembers(perGroup, groups, idCol)
   }
 
   /** URL pattern shared by [[extractUrls]] and its oracle replica:
@@ -433,20 +404,13 @@ object TextAnalysis {
    * token-keyed scoring join back to the corpus followed by a doc-keyed
    * average. Production corpora bound the vocab by hashing features
    * into B buckets (the DSIR trick); here features are exact tokens so
-   * the oracle can replicate the model bit-for-bit.
+   * the oracle can replicate the model bit-for-bit. Identical raw texts
+   * run once per [[ExactGroups]] group and both LMs count with
+   * group-size weights; a null id gets no row.
    */
   def crossEntropyDiff(raw: DataFrame, target: DataFrame, idCol: String,
       textCol: String, smoothing: Double = 1.0): DataFrame = {
-    // Exact-duplicate grouping (r19, the bigramPerplexity analysis):
-    // both LMs are count models, so identical texts contribute
-    // g-weighted counts (exact integer equality with the per-copy
-    // explode), and the per-document score — a function of the text
-    // and the two LMs only — computes once per distinct raw text and
-    // expands to members. Differential-pinned in DedupNgramSpec.
-    val groups = raw.groupBy(col(textCol).as("__text"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1L)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
+    val groups = ExactGroups.of(raw, idCol, textCol)
     val gToks = groups
       .select(col("gid"), col("g"),
         explode(split(lower(trim(col("__text"))), "\\s+")).as("token"))
@@ -466,46 +430,16 @@ object TextAnalysis {
       (log((col("c_t") + smoothing) / (col("t_t") + lit(smoothing) * col("v"))) -
         log((col("c_r") + smoothing) / (col("t_r") + lit(smoothing) * col("v"))))
         .as("log_ratio"))
-    gToks.join(scored, Seq("token"))
+    val perGroup = gToks.join(scored, Seq("token"))
       .groupBy(col("gid"))
       .agg(count(lit(1L)).as("n_tokens"), avg(col("log_ratio")).as("__ce"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_tokens"), col("__ce"))
-      .select(col(idCol), col("n_tokens"),
+      .select(col("gid"), col("n_tokens"),
         // + 0.0 normalizes IEEE negative zero (a tiny negative average
         // rounds to -0.0 in one engine and +0.0 in the other — equal
         // numerically, different bytes under result hashing)
         (round(col("__ce"), 6) + lit(0.0)).as("ce_diff"),
         (round(col("__ce"), 6) > 0).as("selected"))
-  }
-
-  /** The pre-r19 UNGROUPED cross-entropy-difference pipeline, kept as
-    * the differential-testing reference for [[crossEntropyDiff]]. Not
-    * on any query path. */
-  private[graft] def crossEntropyDiffUngrouped(raw: DataFrame, target: DataFrame,
-      idCol: String, textCol: String, smoothing: Double = 1.0): DataFrame = {
-    def tokens(df: DataFrame, cols: Seq[Column]): DataFrame =
-      df.select(cols :+ explode(split(lower(trim(col(textCol))), "\\s+")).as("token"): _*)
-        .where(length(col("token")) > 0)
-    val rawToks = tokens(raw, Seq(col(idCol)))
-    val cr = rawToks.groupBy("token").agg(count(lit(1L)).as("c_r"))
-    val ct = tokens(target, Seq.empty).groupBy("token").agg(count(lit(1L)).as("c_t"))
-    val feats = cr.join(ct, Seq("token"), "full_outer")
-      .select(col("token"),
-        coalesce(col("c_r"), lit(0L)).as("c_r"),
-        coalesce(col("c_t"), lit(0L)).as("c_t"))
-    val tot = feats.agg(sum("c_r").as("t_r"), sum("c_t").as("t_t"),
-      count(lit(1L)).as("v"))
-    val scored = feats.crossJoin(tot).select(col("token"),
-      (log((col("c_t") + smoothing) / (col("t_t") + lit(smoothing) * col("v"))) -
-        log((col("c_r") + smoothing) / (col("t_r") + lit(smoothing) * col("v"))))
-        .as("log_ratio"))
-    rawToks.join(scored, Seq("token"))
-      .groupBy(col(idCol))
-      .agg(count(lit(1L)).as("n_tokens"), avg(col("log_ratio")).as("__ce"))
-      .select(col(idCol), col("n_tokens"),
-        (round(col("__ce"), 6) + lit(0.0)).as("ce_diff"),
-        (round(col("__ce"), 6) > 0).as("selected"))
+    ExactGroups.expandMembers(perGroup, groups, idCol)
   }
 
   /**
@@ -703,81 +637,34 @@ object TextAnalysis {
   }
 
   /** [[dsirWeights]] when the target is a PREDICATE over the raw corpus
-    * itself (the common in-domain/out-of-domain split): tokenizes and
-    * hashes the corpus ONCE into a compact (id, bucket, cnt) profile
-    * that feeds BOTH the model fit and the per-document scores — the
-    * expensive pass (n-gram explode + portable md5 bucketing) runs a
-    * single time instead of once per consumer. The profile is
-    * persisted (MEMORY_AND_DISK, the [[Pipelines.dedupCorpus]]
-    * discipline — the session/bench harness owns release); it carries
-    * one row per (document, distinct bucket), i.e. ≤ min(buckets,
-    * n-grams) per document, compacted map-side before its one shuffle. */
+    * itself (the common in-domain/out-of-domain split). Two corpus
+    * passes with ZERO corpus-scale state: the fit is one bucket-keyed
+    * aggregate whose ≤ `buckets` rows collect to the driver
+    * ([[dsirBucketCounts]]; the driver math is the same IEEE expression
+    * tree the SQL form evaluates), and scoring is one pass under that
+    * fixed model ([[dsirScoreWithModel]]). Both passes run once per
+    * [[ExactGroups]] group of (text, filter value) — text-identical rows
+    * with different target labels never merge — with the fit counts
+    * weighted by group size; a null id gets no row. */
   def dsirWeightsWhere(raw: DataFrame, targetFilter: Column, idCol: String,
       textCol: String, buckets: Int = 4096,
       smoothing: Double = 1.0): DataFrame = {
-    // Fit: one pass ending in a bucket-keyed aggregate — the shuffle
-    // carries ≤ buckets rows per map split, and the model (≤ `buckets`
-    // rows BY CONSTRUCTION) collects to the driver. Two corpus passes
-    // total (fit, then score) with ZERO corpus-scale state — no
-    // persist pressure, the recompute-over-materialize call a 100 TB
-    // corpus forces anyway; the driver math is the same IEEE
-    // expression tree the SQL form evaluates.
-    //
-    // Exact-duplicate grouping (r19): both passes now run once per
-    // DISTINCT (text, filter-value) — the filter value joins the group
-    // key so text-identical rows with different target labels never
-    // merge — with the fit counts weighted by group size (c·g ≡ c per
-    // copy) and the per-document score (text + model only) expanded to
-    // members. Differential-pinned in DedupNgramSpec.
-    val groups = raw.groupBy(col(textCol).as("__text"), targetFilter.as("__is_t"))
-      .agg(min(col(idCol)).as("gid"), count(lit(1L)).as("g"),
-        collect_list(col(idCol)).as("members"))
-      .localCheckpoint(eager = false)
-    import graft.functions.word_shingles
-    val gInst = groups.select(col("gid"), col("g"), col("__is_t"), explode(concat(
-        coalesce(word_shingles(col("__text"), 1), array()),
-        coalesce(word_shingles(col("__text"), 2), array()))).as("__ngram"))
-      .select(col("gid"), col("g"), col("__is_t"),
-        dsirBucket(col("__ngram"), buckets).as("bucket"))
-    val rows = gInst.groupBy("bucket").agg(
-        sum(col("g")).as("c_r"),
-        sum(when(col("__is_t"), col("g")).otherwise(0L)).as("c_t")).collect()
-    val cR = new Array[Long](buckets); val cT = new Array[Long](buckets)
-    rows.foreach { r =>
-      val b = r.getAs[Int]("bucket"); cR(b) = r.getAs[Long]("c_r"); cT(b) = r.getAs[Long]("c_t")
-    }
-    val logRatio = dsirLogRatios(cR, cT, smoothing)
-    gInst
-      .select(col("gid"),
-        element_at(typedLit(logRatio.toSeq), col("bucket") + 1).as("log_ratio"))
-      .groupBy(col("gid"))
-      .agg(count(lit(1L)).as("n_feats"), sum(col("log_ratio")).as("__s"))
-      .join(groups.select(col("gid"), col("members")), "gid")
-      .select(explode(col("members")).as(idCol), col("n_feats"), col("__s"))
-      .select(col(idCol), col("n_feats"),
-        (round(col("__s"), 6) + lit(0.0)).as("dsir_logw"),
-        (round(col("__s") / col("n_feats"), 6) + lit(0.0)).as("avg_logw"),
-        (round(col("__s") / col("n_feats"), 6) > 0).as("selected"))
+    val groups = ExactGroups.of(raw, idCol, textCol, targetFilter.as("__is_t"))
+    val (cR, cT) = dsirBucketCounts(groups, col("__is_t"), "gid", "__text", buckets,
+      weight = col("g"))
+    ExactGroups.expandMembers(dsirScoreWithModel(groups, "gid", "__text",
+      dsirLogRatios(cR, cT, smoothing), buckets), groups, idCol)
   }
 
-  /** The pre-r19 UNGROUPED [[dsirWeightsWhere]], kept as the
-    * differential-testing reference. Not on any query path. */
-  private[graft] def dsirWeightsWhereUngrouped(raw: DataFrame, targetFilter: Column,
-      idCol: String, textCol: String, buckets: Int = 4096,
-      smoothing: Double = 1.0): DataFrame = {
-    val (cR, cT) = dsirBucketCounts(raw, targetFilter, idCol, textCol, buckets)
-    dsirScoreWithModel(raw, idCol, textCol,
-      dsirLogRatios(cR, cT, smoothing), buckets)
-  }
-
-  /** One fit pass: (raw count, target count) per bucket, driver-sized. */
+  /** One fit pass: (raw count, target count) per bucket, driver-sized;
+    * each document counts `weight` times. */
   private[graft] def dsirBucketCounts(df: DataFrame, targetFilter: Column,
-      idCol: String, textCol: String,
-      buckets: Int): (Array[Long], Array[Long]) = {
-    val rows = dsirInstances(df, targetFilter, idCol, textCol, buckets)
+      idCol: String, textCol: String, buckets: Int,
+      weight: Column = lit(1L)): (Array[Long], Array[Long]) = {
+    val rows = dsirInstances(df, targetFilter, idCol, textCol, buckets, weight)
       .groupBy("bucket").agg(
-        count(lit(1L)).as("c_r"),
-        sum(when(col("__is_t"), 1L).otherwise(0L)).as("c_t")).collect()
+        sum(col("__w")).as("c_r"),
+        sum(when(col("__is_t"), col("__w")).otherwise(0L)).as("c_t")).collect()
     val cR = new Array[Long](buckets); val cT = new Array[Long](buckets)
     rows.foreach { r =>
       val b = r.getAs[Int]("bucket"); cR(b) = r.getAs[Long]("c_r"); cT(b) = r.getAs[Long]("c_t")
@@ -814,15 +701,16 @@ object TextAnalysis {
         (round(col("__s") / col("n_feats"), 6) + lit(0.0)).as("avg_logw"),
         (round(col("__s") / col("n_feats"), 6) > 0).as("selected"))
 
-  /** (id, is_target, bucket) n-gram instance frame — the shared
-    * tokenize+hash pass of every DSIR face. */
+  /** (id, is_target, weight `__w`, bucket) n-gram instance frame — the
+    * shared tokenize+hash pass of every DSIR face. */
   private[graft] def dsirInstances(df: DataFrame, targetFilter: Column,
-      idCol: String, textCol: String, buckets: Int): DataFrame = {
+      idCol: String, textCol: String, buckets: Int,
+      weight: Column = lit(1L)): DataFrame = {
     import graft.functions.word_shingles
-    df.select(col(idCol), targetFilter.as("__is_t"), explode(concat(
+    df.select(col(idCol), targetFilter.as("__is_t"), weight.as("__w"), explode(concat(
         coalesce(word_shingles(col(textCol), 1), array()),
         coalesce(word_shingles(col(textCol), 2), array()))).as("__ngram"))
-      .select(col(idCol), col("__is_t"),
+      .select(col(idCol), col("__is_t"), col("__w"),
         dsirBucket(col("__ngram"), buckets).as("bucket"))
   }
 

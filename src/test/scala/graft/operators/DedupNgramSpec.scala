@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 /** Differential pins for the r19 exact-duplicate-grouped
   * [[Dedup.ngramJaccardPairs]]: the grouped kernel must be
   * SET-IDENTICAL to the pre-r19 ungrouped reference
-  * ([[Dedup.ngramJaccardPairsUngrouped]]) on every corpus shape that
+  * ([[UngroupedKernels.ngramJaccardPairsUngrouped]]) on every corpus shape that
   * exercises a branch of the equivalence argument — duplicate groups,
   * cap-engaging posting lists, partially-capped within-group jaccard,
   * null ids, empty texts, and string ids. */
@@ -17,7 +17,7 @@ class DedupNgramSpec extends SparkSpec {
   private def assertSame(df: DataFrame, idCol: String = "id",
       n: Int = 2, threshold: Double = 0.5, maxPostings: Int = 500): Unit = {
     val a = Dedup.ngramJaccardPairs(df, idCol, "text", n, threshold, maxPostings)
-    val b = Dedup.ngramJaccardPairsUngrouped(df, idCol, "text", n, threshold, maxPostings)
+    val b = UngroupedKernels.ngramJaccardPairsUngrouped(df, idCol, "text", n, threshold, maxPostings)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
       s"grouped kernel diverged: grouped=${a.collect().toSeq.sortBy(_.toString)} " +
         s"ungrouped=${b.collect().toSeq.sortBy(_.toString)}")
@@ -132,7 +132,7 @@ class DedupNgramSpec extends SparkSpec {
     for ((df, id) <- Seq((dupCorpus, "id"),
         (spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id"))) {
       val a = Dedup.simhashNearDuplicates(df, id, "text", maxDistance = 5)
-      val b = Dedup.simhashNearDuplicatesUngrouped(df, id, "text", maxDistance = 5)
+      val b = UngroupedKernels.simhashNearDuplicatesUngrouped(df, id, "text", maxDistance = 5)
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"simhash grouped diverged on $id corpus")
     }
@@ -142,7 +142,7 @@ class DedupNgramSpec extends SparkSpec {
     for ((df, id) <- Seq((dupCorpus, "id"),
         (spark.read.parquet(s"$sfDir/documents.parquet"), "doc_id"))) {
       val a = TextAnalysis.bigramPerplexity(df, id, "text")
-      val b = TextAnalysis.bigramPerplexityUngrouped(df, id, "text")
+      val b = UngroupedKernels.bigramPerplexityUngrouped(df, id, "text")
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"perplexity grouped diverged on $id corpus")
     }
@@ -154,7 +154,7 @@ class DedupNgramSpec extends SparkSpec {
         (dupCorpus, dupCorpus.where(col("id") % 2 === 0), "id"),
         (fixture, fixture.where(col("lang") === "en"), "doc_id"))) {
       val a = TextAnalysis.crossEntropyDiff(raw, tgt, id, "text")
-      val b = TextAnalysis.crossEntropyDiffUngrouped(raw, tgt, id, "text")
+      val b = UngroupedKernels.crossEntropyDiffUngrouped(raw, tgt, id, "text")
       assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
         s"crossEntropyDiff grouped diverged on $id corpus")
     }
@@ -169,11 +169,52 @@ class DedupNgramSpec extends SparkSpec {
       (4L, "delta epsilon zeta", true), (5L, "eta theta iota", false)
     ).toDF("id", "text", "in_target")
     val a = TextAnalysis.dsirWeightsWhere(df, col("in_target"), "id", "text", buckets = 64)
-    val b = TextAnalysis.dsirWeightsWhereUngrouped(df, col("in_target"), "id", "text", buckets = 64)
+    val b = UngroupedKernels.dsirWeightsWhereUngrouped(df, col("in_target"), "id", "text", buckets = 64)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
     val fixture = spark.read.parquet(s"$sfDir/documents.parquet")
     val c = TextAnalysis.dsirWeightsWhere(fixture, col("lang") === "en", "doc_id", "text")
-    val d = TextAnalysis.dsirWeightsWhereUngrouped(fixture, col("lang") === "en", "doc_id", "text")
+    val d = UngroupedKernels.dsirWeightsWhereUngrouped(fixture, col("lang") === "en", "doc_id", "text")
     assert(c.exceptAll(d).count() == 0 && d.exceptAll(c).count() == 0)
+  }
+
+  // ---- null ids (the ExactGroups rule): a null id gets no output row.
+  // The ungrouped LM references pool every null-id document into ONE
+  // null-id row, so they agree with the grouped kernels on the non-null
+  // rows only. The null-id texts still feed the corpus LM counts, and
+  // one of them duplicates a non-null text (same group, null member).
+
+  private lazy val nullIdCorpus = Seq(
+    (java.lang.Long.valueOf(1L), "alpha beta gamma delta"),
+    (null.asInstanceOf[java.lang.Long], "alpha beta gamma delta"),
+    (null.asInstanceOf[java.lang.Long], "beta gamma beta alpha"),
+    (java.lang.Long.valueOf(4L), "gamma delta alpha beta")
+  ).toDF("id", "text")
+
+  private def assertNullIdDropped(grouped: DataFrame, ungrouped: DataFrame): Unit = {
+    assert(grouped.where(col("id").isNull).count() == 0, "grouped kernel emitted a null-id row")
+    assert(ungrouped.where(col("id").isNull).count() == 1) // the pooled reference row
+    val b = ungrouped.where(col("id").isNotNull)
+    assert(grouped.count() == 2 &&
+      grouped.exceptAll(b).count() == 0 && b.exceptAll(grouped).count() == 0,
+      s"grouped=${grouped.collect().toSeq} ungrouped=${b.collect().toSeq}")
+  }
+
+  test("bigramPerplexity: null ids get no row; non-null rows ≡ ungrouped") {
+    assertNullIdDropped(TextAnalysis.bigramPerplexity(nullIdCorpus, "id", "text"),
+      UngroupedKernels.bigramPerplexityUngrouped(nullIdCorpus, "id", "text"))
+  }
+
+  test("crossEntropyDiff: null ids get no row; non-null rows ≡ ungrouped") {
+    val tgt = Seq("alpha beta", "delta delta gamma").toDF("text")
+    assertNullIdDropped(TextAnalysis.crossEntropyDiff(nullIdCorpus, tgt, "id", "text"),
+      UngroupedKernels.crossEntropyDiffUngrouped(nullIdCorpus, tgt, "id", "text"))
+  }
+
+  test("dsirWeightsWhere: null ids get no row; non-null rows ≡ ungrouped") {
+    val inTarget = col("text").startsWith("alpha")
+    assertNullIdDropped(
+      TextAnalysis.dsirWeightsWhere(nullIdCorpus, inTarget, "id", "text", buckets = 64),
+      UngroupedKernels.dsirWeightsWhereUngrouped(nullIdCorpus, inTarget, "id", "text",
+        buckets = 64))
   }
 }

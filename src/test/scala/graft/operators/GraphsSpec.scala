@@ -126,6 +126,20 @@ class GraphsSpec extends SparkSpec {
       Map(0L -> 0, 1L -> 1, 2L -> 2))
   }
 
+  test("reachability: few edges but more sources than the threshold take the distributed loop") {
+    // 3 edges <= threshold 4 < 5 sources: the edge check passes, the
+    // source check sends the walk to the distributed loop
+    val g = edges(("a", "b"), ("b", "c"), ("x", "y"))
+    val src = Seq("a", "x", "p", "q", "r").toDF("node")
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getInt(1))).toMap
+    val mixed = asMap(Graphs.reachability(g, src, maxDepth = 10, smallGraphThreshold = 4L))
+    val local = asMap(Graphs.reachability(g, src, maxDepth = 10))
+    assert(mixed === local)
+    assert(local === Map("a" -> 0, "x" -> 0, "p" -> 0, "q" -> 0, "r" -> 0,
+      "b" -> 1, "y" -> 1, "c" -> 2))
+  }
+
   test("triangleStats: K4 has 4 triangles and clustering 1.0") {
     val k4 = for (a <- Seq("a", "b", "c", "d"); b <- Seq("a", "b", "c", "d") if a < b) yield (a, b)
     val r = Graphs.triangleStats(edges(k4: _*)).collect()(0)

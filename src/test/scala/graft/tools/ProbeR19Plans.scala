@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * every query this optimization round touches, written to plans/r19/.
   * "Before" plans are reconstructed by composing the SAME declared
   * query shapes over the kept pre-round reference implementations
-  * (e.g. [[graft.operators.Dedup.ngramJaccardPairsUngrouped]]), so the
+  * (e.g. [[graft.operators.UngroupedKernels.ngramJaccardPairsUngrouped]]), so the
   * dumped shapes are exactly the pre-change plans.
-  * Usage: Test/runMain graft.tools.ProbeR19Plans <sfDir>
+  * Usage: Test/runMain graft.tools.ProbeR19Plans <sfDir> [outDir]
+  * (outDir defaults to plans/r19).
   */
 object ProbeR19Plans {
   def main(args: Array[String]): Unit = {
@@ -24,24 +25,26 @@ object ProbeR19Plans {
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     graft.sources.Sources.register(spark, dir)
-    Files.createDirectories(Paths.get("plans/r19"))
+    val outDir = Paths.get(args.lift(1).getOrElse("plans/r19"))
+    Files.createDirectories(outDir)
 
     def dump(name: String, df: DataFrame): Unit = {
       val s = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(Paths.get(s"plans/r19/$name.txt"), s)
-      println(s"PROBE wrote plans/r19/$name.txt (${s.length} chars)")
+      val out = outDir.resolve(s"$name.txt")
+      Files.writeString(out, s)
+      println(s"PROBE wrote $out (${s.length} chars)")
       spark.catalog.clearCache()
     }
     def after(q: String): Unit =
       dump(s"${q}_after", graft.SparkEntry.queries(q)(spark, dir))
 
-    import graft.operators.{Dedup, Sampling}
+    import graft.operators.{Dedup, Sampling, UngroupedKernels}
     val docs = spark.table("documents")
 
     // ---- ngram-pairs kernel family: before = ungrouped kernel composed
     // exactly like each declared query ----
-    def oldPairs = Dedup.ngramJaccardPairsUngrouped(
+    def oldPairs = UngroupedKernels.ngramJaccardPairsUngrouped(
       docs, "doc_id", "text", n = 3, threshold = 0.8)
 
     dump("x_dedup_ngram_before",
@@ -141,7 +144,7 @@ object ProbeR19Plans {
         .where(graft.operators.TextAnalysis.tokenCount(col("text")) >= 75)
       val planted = base.select((col("doc_id") + 100000).as("doc_id"),
         concat(col("text"), lit(" zqxwv")).as("text"))
-      Dedup.simhashNearDuplicatesUngrouped(base.union(planted), "doc_id", "text",
+      UngroupedKernels.simhashNearDuplicatesUngrouped(base.union(planted), "doc_id", "text",
         maxDistance = 5)
         .where(col("id_b") === col("id_a") + 100000)
         .select("id_a", "id_b").orderBy("id_a").limit(500)
@@ -150,18 +153,18 @@ object ProbeR19Plans {
 
     // ---- perplexity grouping: before = ungrouped LM composition ----
     dump("x_perplexity_before",
-      graft.operators.TextAnalysis.bigramPerplexityUngrouped(docs, "doc_id", "text")
+      UngroupedKernels.bigramPerplexityUngrouped(docs, "doc_id", "text")
         .orderBy("doc_id").limit(200))
     after("x_perplexity")
 
     // ---- moore_lewis / dsir grouping ----
     dump("x_moore_lewis_before",
-      graft.operators.TextAnalysis.crossEntropyDiffUngrouped(
+      UngroupedKernels.crossEntropyDiffUngrouped(
         docs, docs.where(col("lang") === "en"), "doc_id", "text")
         .orderBy("doc_id"))
     after("x_moore_lewis")
     dump("x_dsir_before",
-      graft.operators.TextAnalysis.dsirWeightsWhereUngrouped(
+      UngroupedKernels.dsirWeightsWhereUngrouped(
         docs, col("lang") === "en", "doc_id", "text")
         .orderBy("doc_id"))
     after("x_dsir")
